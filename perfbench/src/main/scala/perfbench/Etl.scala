@@ -22,11 +22,13 @@ import graft.sources.CorpusLayout
   *  5. `GraphStorage.commitSnapshot` + `expireSnapshots`;
   *  6. G-queries served from `GraphStorage.readSnapshot`.
   *
-  * Each stage's output is materialized at its boundary
-  * (`localCheckpoint`), in traced and untraced runs alike, so a span
-  * around a stage holds that stage's jobs. The upstream's work (appending
-  * flow rows to the log, aging out old buckets) and the correctness check
-  * run between cycles and are not timed.
+  * Untraced cycles run the plain composition: every stage stays lazy
+  * until the commit writes it. Traced cycles put a barrier
+  * (`Tracer.barrier`) at each stage boundary, so a span around a stage
+  * holds that stage's jobs; the windowed flow slice is materialized inside
+  * `sources.scan`, so the scan and its bytes count there. The upstream's
+  * work (appending flow rows to the log, aging out old buckets) and the
+  * correctness check run between cycles and are not timed.
   */
 final class Etl(spark: SparkSession, tr: Tracer, gen: Gen, root: String) {
   import Etl._
@@ -69,16 +71,16 @@ final class Etl(spark: SparkSession, tr: Tracer, gen: Gen, root: String) {
   }
 
   /** Fresh starting store: flow history for the first window, the
-    * run-0 topology as vertex snapshot v0 and the starting edges as v0. */
+    * run-0 topology as vertex snapshot v0 and an empty edge snapshot v0
+    * that the cycles fill. */
   def setup(): Unit = {
     deleteTree(root)
     writeFlows(gen.history)
     val verts = Model.topology(Map.empty, gen.snapshot(0), Nil, 0L)
     GraphStorage.commitSnapshot(verticesDf(verts.values.toSeq), vRoot)
-    val edges = gen.startEdges
-    GraphStorage.commitSnapshot(edgesDf(edges), eRoot)
+    GraphStorage.commitSnapshot(edgesDf(Nil), eRoot)
     mVerts = verts
-    mEdges.clear(); edges.foreach(e => mEdges(e.key) = e)
+    mEdges.clear()
     mFlows.clear(); mFlows ++= gen.history
   }
 
@@ -114,15 +116,18 @@ final class Etl(spark: SparkSession, tr: Tracer, gen: Gen, root: String) {
     val b1 = (in.windowEndMs - 1) / gen.StepMs
     val priorV = GraphStorage.latestVersion(spark, vRoot)
 
+    val window = col("bucket").between(b0, b1) && col("ts_ms") >= in.windowStartMs &&
+      col("ts_ms") < in.windowEndMs
+
     val t0 = System.nanoTime()
     val newV = tr.span("etl.cycle") {
-      val flows = tr.span("sources.scan") { CorpusLayout.readSlice(spark, flowRoot) }
+      val flows = tr.span("sources.scan") {
+        val log = CorpusLayout.readSlice(spark, flowRoot)
+        if (tr.on) tr.barrier(log.filter(window)) else log
+      }
       val batch = tr.span("pipelines.flow_graph") {
-        Pipelines.flowGraph(flows, dimDf, "src_key", "dst_service",
-          "response_ms",
-          col("bucket").between(b0, b1) && col("ts_ms") >= in.windowStartMs &&
-            col("ts_ms") < in.windowEndMs,
-          col("status") >= 500).localCheckpoint()
+        tr.barrier(Pipelines.flowGraph(flows, dimDf, "src_key", "dst_service",
+          "response_ms", window, col("status") >= 500))
       }
       val callEdges = batch.select(lit("Microservice").as("src_label"),
         col("src_service").as("src_name"), lit("Calls").as("edge_label"),
@@ -135,28 +140,26 @@ final class Etl(spark: SparkSession, tr: Tracer, gen: Gen, root: String) {
           import spark.implicits._
           val tdf = tpls.map(t => (t.stack, t.logical, t.json))
             .toDF("stack_name", "src_logical", "template_json")
-          Pipelines.declaredDeps(tdf, phys.toDF("logical_id", "physical_id"))
+          tr.barrier(Pipelines.declaredDeps(tdf, phys.toDF("logical_id", "physical_id"))
             .select(lit("CfnResource").as("src_label"), col("src").as("src_name"),
               col("edge_label"), lit("CfnResource").as("dst_label"),
               col("dst").as("dst_name"), lit(null).cast("long").as("calls"),
               lit(null).cast("double").as("avg_value"),
               lit(null).cast("long").as("err_count"),
               lit(null).cast("double").as("p99_value"), col("declared_in"),
-              col("stack_name"), lit(in.stamp).as("last_seen"))
-            .localCheckpoint()
+              col("stack_name"), lit(in.stamp).as("last_seen")))
         }
       }
       val newV = in.topology.map { case (snap, alarms) =>
         tr.span("pipelines.topology") {
           val store = tr.span("model.open_store") { GraphStorage.readSnapshot(spark, vRoot) }
-          Pipelines.topology(store, keysDf(snap), keysDf(alarms), in.stamp)
-            .localCheckpoint()
+          tr.barrier(Pipelines.topology(store, keysDf(snap), keysDf(alarms), in.stamp))
         }
       }
       val merged = tr.span("ops.merge_edges") {
         val store = tr.span("model.open_store") { GraphStorage.readSnapshot(spark, eRoot) }
         val batchAll = depEdges.fold(callEdges)(callEdges.unionByName(_))
-        GraphStore.mergeEdges(store, batchAll, EdgeProps).localCheckpoint()
+        tr.barrier(GraphStore.mergeEdges(store, batchAll, EdgeProps))
       }
       tr.span("model.commit") {
         GraphStorage.commitSnapshot(merged, eRoot)
@@ -233,18 +236,18 @@ final class Etl(spark: SparkSession, tr: Tracer, gen: Gen, root: String) {
     if (audit) {
       // per-layer counts of the traced run; the topology report re-runs
       // the topology plan (the library's audit query), so it is untimed
-      tracedCycles += 1
-      flowRowsIn += windowRows
-      flowGroups += Model.rollupGroups(mFlows, in.windowStartMs, in.windowEndMs)
-      flowRowsOut += rolled.size
+      val k = counts
+      k.flowRowsIn += windowRows
+      k.flowGroups += Model.rollupGroups(mFlows, in.windowStartMs, in.windowEndMs)
+      k.flowRowsOut += rolled.size
       in.deploy.foreach { case (t, _) =>
-        depRowsIn += t.size
-        refsExtracted += t.map(_.refs.size).sum
-        depRowsOut += deps.get.size
+        k.depRowsIn += t.size
+        k.refsExtracted += t.map(_.refs.size).sum
+        k.depRowsOut += deps.get.size
       }
       in.topology.foreach { case (snap, alarms) =>
-        topoRowsIn += priorVerts.size + snap.size
-        topoRowsOut += mVerts.size
+        k.topoRowsIn += priorVerts.size + snap.size
+        k.topoRowsOut += mVerts.size
         val prior = GraphStorage.readSnapshot(spark, vRoot, priorV)
         val st = Pipelines.topologyStats(prior, keysDf(snap), keysDf(alarms), in.stamp)
           .collect().head
@@ -252,9 +255,12 @@ final class Etl(spark: SparkSession, tr: Tracer, gen: Gen, root: String) {
         rep.check(st.getAs[Long]("n_created") == cr && st.getAs[Long]("n_matched") == ma &&
           st.getAs[Long]("n_gc") == gc && st.getAs[Long]("n_degraded") == dg,
           s"cycle $c: topologyStats differs from the model")
-        created += cr; matched += ma; gcd += gc; degraded += dg
+        k.created += cr; k.matched += ma; k.gcd += gc; k.degraded += dg
       }
-      filesWritten += newFiles(eRoot) + (if (newV.nonEmpty) newFiles(vRoot) else 0)
+      k.filesWritten += newFiles(eRoot) + (if (newV.nonEmpty) newFiles(vRoot) else 0)
+      k.versionsLive = GraphStorage.versions(spark, vRoot).size +
+        GraphStorage.versions(spark, eRoot).size
+      k.storeBytes = storeBytes
     }
     val kind = Seq(in.topology.map(_ => "topology"), in.deploy.map(_ => "deploy"))
       .flatten.mkString("+")
@@ -263,10 +269,7 @@ final class Etl(spark: SparkSession, tr: Tracer, gen: Gen, root: String) {
         in.deploy.map(_._1.size).getOrElse(0), tr.on)
   }
 
-  // traced-run counters
-  var tracedCycles, flowRowsIn, flowRowsOut, flowGroups, topoRowsIn, topoRowsOut,
-    depRowsIn, depRowsOut, refsExtracted, created, matched, gcd, degraded,
-    filesWritten = 0L
+  val counts = new EtlCounts
 
   private def newFiles(store: String): Long = {
     val v = GraphStorage.latestVersion(spark, store).get
@@ -275,11 +278,17 @@ final class Etl(spark: SparkSession, tr: Tracer, gen: Gen, root: String) {
     fsys.listStatus(path).length.toLong
   }
 
-  def versionsLive: Int =
-    GraphStorage.versions(spark, vRoot).size + GraphStorage.versions(spark, eRoot).size
-
   /** Bytes of the live store (both snapshot roots). */
   def storeBytes: Long = Seq(vRoot, eRoot).map(treeBytes).sum
+}
+
+/** Row, file and store counts of the traced ETL cycles, summed by their
+  * untimed audit (`versionsLive` and `storeBytes` as of the last one). All
+  * zero on a workload that runs no ETL cycle. */
+final class EtlCounts {
+  var flowRowsIn, flowRowsOut, flowGroups, topoRowsIn, topoRowsOut, depRowsIn,
+    depRowsOut, refsExtracted, created, matched, gcd, degraded, filesWritten,
+    versionsLive, storeBytes = 0L
 }
 
 object Etl {

@@ -6,11 +6,11 @@ import scala.util.Random
 /** Traffic dimensions of one ETL workload, read from workloads.json. */
 final case class EtlParams(
     services: Int, unresolvedSrcShare: Double, zipfS: Double,
-    hotShare: Double, rowsPerMinute: Int, lookbackMin: Int, stepMin: Int,
+    rowsPerMinute: Int, lookbackMin: Int, stepMin: Int,
     lateShare: Double, errShare: Double, resources: Int, churnShare: Double,
     alarmShare: Double, topologyEvery: Int, stacks: Int, deployEvery: Int,
     stackResources: Int, nestDepth: Int, danglingRefShare: Double,
-    keepLast: Int, startEdges: Int, warmupCycles: Int)
+    keepLast: Int, warmupCycles: Int)
 
 object EtlParams {
   def fromJson(node: com.fasterxml.jackson.databind.JsonNode): EtlParams = {
@@ -21,11 +21,11 @@ object EtlParams {
     }
     def i(k: String): Int = d(k).toInt
     EtlParams(i("services"), d("unresolved_src_share"), d("zipf_s"),
-      d("hot_share"), i("rows_per_minute"), i("lookback_min"), i("step_min"),
+      i("rows_per_minute"), i("lookback_min"), i("step_min"),
       d("late_share"), d("err_share"), i("resources"), d("churn_share"),
       d("alarm_share"), i("topology_every"), i("stacks"), i("deploy_every"),
       i("stack_resources"), i("nest_depth"), d("dangling_ref_share"),
-      i("keep_last"), i("start_edges"), i("warmup_cycles"))
+      i("keep_last"), i("warmup_cycles"))
   }
 }
 
@@ -68,21 +68,18 @@ final class Gen(val seed: Long, val p: EtlParams) {
     math.max(1, math.round(p.services * p.unresolvedSrcShare).toInt)
   val serviceDim: Seq[(Int, String)] =
     serviceNames.zipWithIndex.map { case (n, i) => (i + 1, n) }
+  /** The most popular service (Zipf rank 0), the G-queries' anchor. */
   val hotService: String = serviceNames(0)
 
-  // Zipf over service ranks; rank 0 is also the hot service
+  // Zipf over service ranks
   private val zipfCdf: Array[Double] = {
     val w = (1 to p.services).map(r => 1.0 / math.pow(r, p.zipfS))
     val tot = w.sum
     w.scanLeft(0.0)(_ + _).tail.map(_ / tot).toArray
   }
   private def zipf(r: Random): Int = {
-    if (r.nextDouble() < p.hotShare) 0
-    else {
-      val u = r.nextDouble()
-      val i = java.util.Arrays.binarySearch(zipfCdf, u)
-      math.min(p.services - 1, if (i >= 0) i else -i - 1)
-    }
+    val i = java.util.Arrays.binarySearch(zipfCdf, r.nextDouble())
+    math.min(p.services - 1, if (i >= 0) i else -i - 1)
   }
 
   /** The rows whose event time falls in `minute` (minutes since Epoch). */
@@ -236,36 +233,5 @@ final class Gen(val seed: Long, val p: EtlParams) {
     }
     CycleInput(cycle, end - p.lookbackMin * MinuteMs, end, cycle.toLong,
       arrivals(cycle), topo, deploy)
-  }
-
-  /** Pre-existing call and dependency edges of the starting store. */
-  def startEdges: Seq[EdgeRow] = {
-    val r = rng(6, 0)
-    val keys = mutable.LinkedHashSet.empty[(String, String, String)]
-    var tries = 0
-    while (keys.size < p.startEdges && tries < p.startEdges * 20) {
-      tries += 1
-      val a = zipf(r); val b = zipf(r)
-      if (a != b) {
-        if (r.nextBoolean()) keys += (("Calls", serviceNames(a), serviceNames(b)))
-        else {
-          val k = r.nextInt(p.stacks)
-          val i = r.nextInt(p.stackResources); val j = r.nextInt(p.stackResources)
-          if (i != j) keys += (("DependsOn",
-            s"${stackName(k)}-${logicalId(k, i).toLowerCase}",
-            s"${stackName(k)}-${logicalId(k, j).toLowerCase}"))
-        }
-      }
-    }
-    keys.toSeq.map {
-      case ("Calls", s, d) =>
-        EdgeRow("Microservice", s, "Calls", "Microservice", d,
-          Some(2L + r.nextInt(50)), Some((100 + r.nextInt(9000)) / 100.0),
-          Some(r.nextInt(3).toLong), Some((100 + r.nextInt(9000)) / 100.0),
-          None, None, 0L)
-      case (l, s, d) =>
-        EdgeRow("CfnResource", s, l, "CfnResource", d, None, None, None, None,
-          Some("cfn"), Some(s.take(9)), 0L)
-    }
   }
 }

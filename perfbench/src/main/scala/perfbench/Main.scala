@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 /** The benchmark JVM: one workload, one seed, one run.
   *
   * {{{
-  * perfbench.Main --workload etl_cycle|etl_backfill|operator_mix
+  * perfbench.Main --workload etl_cycle|operator_mix
   *   --seed N --seconds S --trace 0|1 --bench-dir DIR --work DIR --out FILE
   * }}}
   *
@@ -18,17 +18,19 @@ import org.apache.spark.sql.SparkSession
   */
 object Main {
   final case class Args(workload: String, seed: Long, seconds: Double,
-      trace: Boolean, benchDir: String, work: String, out: String, cpus: Int)
+      trace: Boolean, benchDir: String, work: String, out: String)
 
   def parse(a: Array[String]): Args = {
     val m = a.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     def need(k: String) = m.getOrElse(k, throw new IllegalArgumentException(s"--$k is required"))
     Args(need("workload"), need("seed").toLong, need("seconds").toDouble,
-      need("trace") == "1", need("bench-dir"), need("work"), need("out"),
-      m.get("cpus").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors()))
+      need("trace") == "1", need("bench-dir"), need("work"), need("out"))
   }
 
-  val SetupRepeats = 3
+  /** Cores of the `local[n]` master: every core of the host. */
+  val Cores: Int = Runtime.getRuntime.availableProcessors()
+  /** Set-ups per run; each workload warms the JVM before them. */
+  val SetupRepeats = 7
   val MiB = 1048576.0
 
   def main(argv: Array[String]): Unit = {
@@ -36,12 +38,13 @@ object Main {
     val spec = new ObjectMapper().readTree(new java.io.File(s"${a.benchDir}/workloads.json"))
     val wl = Option(spec.get(a.workload)).getOrElse(
       throw new IllegalArgumentException(s"unknown workload ${a.workload}"))
-    val spark = BenchSession.create(a.cpus, a.work)
+    val spark = BenchSession.create(Cores, a.work)
     val counters = new SparkCounters
     spark.sparkContext.addSparkListener(counters)
     val tr = new Tracer(spark.sparkContext, counters)
     val rep = new Report
     try {
+      rep.note("loads", wl.get("loads").toString)
       if (a.workload == "operator_mix") runMix(spark, tr, rep, a, wl)
       else runEtl(spark, tr, rep, a, wl, spec.get("baseline"))
       val out = java.nio.file.Paths.get(a.out)
@@ -83,19 +86,24 @@ object Main {
   def runEtl(spark: SparkSession, tr: Tracer, rep: Report, a: Args,
       wl: JsonNode, baseline: JsonNode): Unit = {
     val gen = new Gen(a.seed, EtlParams.fromJson(wl))
+    // warm the JVM on a throw-away store: the first set-up and cycles run
+    // JIT-cold, up to ten times slower than the timed ones
+    val warm = new Etl(spark, tr, gen, s"${a.work}/warm")
+    warm.setup()
+    (1 to gen.p.warmupCycles).foreach(c => warm.cycle(c, rep, audit = false))
+    Etl.deleteTree(s"${a.work}/warm")
     val etl = timedSetups(rep) { k =>
       if (k > 0) Etl.deleteTree(s"${a.work}/etl${k - 1}")
       val e = new Etl(spark, tr, gen, s"${a.work}/etl$k")
       e.setup()
       e
     }
-    (1 to gen.p.warmupCycles).foreach(c => etl.cycle(c, rep, audit = false))
 
     JvmStats.resetHeapPeak()
     val gc0 = JvmStats.gcMs(); val jit0 = JvmStats.jitMs()
     val cycles = mutable.ArrayBuffer.empty[etl.Cycle]
     val w0 = System.nanoTime()
-    var c = gen.p.warmupCycles + 1
+    var c = 1
     var broken = false
     while (!broken && (cycles.isEmpty || (System.nanoTime() - w0) / 1e9 < a.seconds)) {
       tr.on = a.trace && c % 2 == 1
@@ -137,7 +145,7 @@ object Main {
     rep.e2e("cycle_drift", median(secs.takeRight(q)) / median(secs.take(q)), "ratio")
     rep.e2e("store_mb", etl.storeBytes / MiB, "MiB")
     rep.note("cycle_s", cycles.map(c => s"[${Report.str(c.kind)},${c.seconds}]").mkString("[", ",", "]"))
-    if (a.workload == "etl_cycle" && baseline != null) {
+    if (baseline != null) {
       val ref = baseline.get("reference_s_per_run")
       rep.note("baseline", s"""{"cycle_s":${kindS.sum / kindS.size},"cycle_p50_s":${median(secs)},""" +
         s""""reference_s_per_run":[${ref.get(0).asDouble()},${ref.get(1).asDouble()}],""" +
@@ -145,99 +153,106 @@ object Main {
     }
 
     if (a.trace) {
-      // tracing cost: each kind's traced median against its untraced one
-      val ratios = cycles.groupBy(_.kind).values.toSeq.flatMap { cs =>
-        val (t, u) = cs.partition(_.traced)
-        if (t.isEmpty || u.isEmpty) None
-        else Some(median(t.map(_.seconds).toSeq) / median(u.map(_.seconds).toSeq))
-      }
-      etlLayers(rep, tr, etl, cycles.filter(_.traced).map(_.seconds).sum,
-        if (ratios.isEmpty) 0.0 else median(ratios) - 1, a.cpus,
+      val traced = cycles.filter(_.traced)
+      layers(rep, tr, etl.counts, traced.size, traced.map(_.seconds).sum,
+        overheadFrac(cycles.map(c => (c.kind, c.seconds, c.traced)).toSeq),
         gcS / cycles.size, jitMs / cycles.size)
     }
   }
 
-  private def etlLayers(rep: Report, tr: Tracer, etl: Etl, cycleWall: Double,
-      overhead: Double, cores: Int, gcPerCycle: Double, jitPerCycle: Double): Unit = {
-    val n = math.max(1L, etl.tracedCycles).toDouble
-    val serveSpans = Set("model.snapshot_open", "model.g1_point", "model.g2_label",
-      "model.g3_degree", "model.g5_two_hop")
-    val cnt = tr.counters
-    val all = cnt.total(!serveSpans(_)) // the cycle's own jobs, not the reads
-    def per(x: Double) = x / n
-    def mean(name: String, scale: Double = 1.0) = {
-      val k = tr.count(name); if (k == 0) 0.0 else tr.totalSeconds(name) * scale / k
+  /** Tracing cost: for each kind of unit (cycle kind or query), its traced
+    * median over its untraced one; the median of those ratios, minus 1. */
+  private def overheadFrac(units: Seq[(String, Double, Boolean)]): Double = {
+    val ratios = units.groupBy(_._1).values.toSeq.flatMap { us =>
+      val (t, u) = us.partition(_._3)
+      if (t.isEmpty || u.isEmpty) None
+      else Some(median(t.map(_._2)) / median(u.map(_._2)))
     }
-    def rate(num: Long, den: Long) = if (den == 0) 0.0 else num.toDouble / den
+    if (ratios.isEmpty) 0.0 else median(ratios) - 1
+  }
+
+  /** Spans of the reads served after a commit, not of the cycle itself. */
+  val ServeSpans: Set[String] = Set("model.snapshot_open", "model.g1_point",
+    "model.g2_label", "model.g3_degree", "model.g5_two_hop")
+  /** Span-name prefixes of the library layers. */
+  val Layers: Seq[String] = Seq("sources", "pipelines", "ops", "model", "ext")
+
+  /** Every per-layer metric of a traced run, by one rule on every
+    * workload: read from the spans, the listener, the filesystem counters
+    * and `k`, per traced unit of work (an ETL cycle or a mix pass).
+    * `units` is their number, `unitWall` their summed seconds. A layer the
+    * workload never calls has no spans, jobs, bytes or counts, so its
+    * metrics read 0; `info loads` names the layers each workload loads. */
+  private def layers(rep: Report, tr: Tracer, k: EtlCounts, units: Double,
+      unitWall: Double, overhead: Double, gcPerUnit: Double, jitPerUnit: Double): Unit = {
+    val cnt = tr.counters
+    val all = cnt.total(!ServeSpans(_)) // the unit's own jobs, not the reads
+    def per(x: Double) = x / units
+    def mean(name: String, scale: Double = 1.0) = {
+      val n = tr.count(name); if (n == 0) 0.0 else tr.totalSeconds(name) * scale / n
+    }
+    def rate(num: Double, den: Double) = if (den == 0) 0.0 else num / den
     rep.layer("spark.jobs", per(all.jobs), "count")
     rep.layer("spark.stages", per(all.stages), "count")
     rep.layer("spark.tasks", per(all.tasks), "count")
-    rep.layer("spark.idle_frac", 1 - all.taskMs / 1e3 / (cycleWall * cores), "ratio")
+    rep.layer("spark.idle_frac", 1 - all.taskMs / 1e3 / (unitWall * Cores), "ratio")
     rep.layer("spark.task_s", per(all.taskMs / 1e3), "s")
     rep.layer("spark.shuffle_write_mb", per(all.shuffleWrite / MiB), "MiB")
     rep.layer("spark.shuffle_read_mb", per(all.shuffleRead / MiB), "MiB")
     rep.layer("spark.spill_mb", per(all.spill / MiB), "MiB")
     rep.layer("spark.gc_s", per(all.gcMs / 1e3), "s")
     rep.layer("spark.task_skew", cnt.taskSkew, "ratio")
+    val flowRuns = tr.count("pipelines.flow_graph").toDouble
+    val topoRuns = tr.count("pipelines.topology").toDouble
+    val deploys = tr.count("pipelines.declared_deps").toDouble
     rep.layer("pipelines.flow_graph_s", mean("pipelines.flow_graph"), "s")
-    rep.layer("pipelines.flow_graph.rows_in", rate(etl.flowRowsIn, etl.tracedCycles), "count")
-    rep.layer("pipelines.flow_graph.rows_out", rate(etl.flowRowsOut, etl.tracedCycles), "count")
-    val topoRuns = tr.count("pipelines.topology").toLong
-    val deploys = tr.count("pipelines.declared_deps").toLong
+    rep.layer("pipelines.flow_graph.rows_in", rate(k.flowRowsIn, flowRuns), "count")
+    rep.layer("pipelines.flow_graph.rows_out", rate(k.flowRowsOut, flowRuns), "count")
     rep.layer("pipelines.topology_s", mean("pipelines.topology"), "s")
-    rep.layer("pipelines.topology.rows_in", rate(etl.topoRowsIn, topoRuns), "count")
-    rep.layer("pipelines.topology.rows_out", rate(etl.topoRowsOut, topoRuns), "count")
+    rep.layer("pipelines.topology.rows_in", rate(k.topoRowsIn, topoRuns), "count")
+    rep.layer("pipelines.topology.rows_out", rate(k.topoRowsOut, topoRuns), "count")
     rep.layer("pipelines.declared_deps_s", mean("pipelines.declared_deps"), "s")
-    rep.layer("pipelines.declared_deps.rows_in", rate(etl.depRowsIn, deploys), "count")
-    rep.layer("pipelines.declared_deps.rows_out", rate(etl.depRowsOut, deploys), "count")
+    rep.layer("pipelines.declared_deps.rows_in", rate(k.depRowsIn, deploys), "count")
+    rep.layer("pipelines.declared_deps.rows_out", rate(k.depRowsOut, deploys), "count")
     rep.layer("ops.merge_edges_s", mean("ops.merge_edges"), "s")
-    rep.layer("ops.rollup_kept_ratio", rate(etl.flowRowsOut, etl.flowGroups), "ratio")
-    rep.layer("ops.created", rate(etl.created, topoRuns), "count")
-    rep.layer("ops.matched", rate(etl.matched, topoRuns), "count")
-    rep.layer("ops.gc", rate(etl.gcd, topoRuns), "count")
-    rep.layer("ops.degraded", rate(etl.degraded, topoRuns), "count")
-    rep.layer("ops.refs_resolved_ratio", rate(etl.depRowsOut, etl.refsExtracted), "ratio")
+    rep.layer("ops.rollup_kept_ratio", rate(k.flowRowsOut, k.flowGroups), "ratio")
+    rep.layer("ops.created", rate(k.created, topoRuns), "count")
+    rep.layer("ops.matched", rate(k.matched, topoRuns), "count")
+    rep.layer("ops.gc", rate(k.gcd, topoRuns), "count")
+    rep.layer("ops.degraded", rate(k.degraded, topoRuns), "count")
+    rep.layer("ops.refs_resolved_ratio", rate(k.depRowsOut, k.refsExtracted), "ratio")
     val fs = tr.fsBySpan
     def fsOf(names: Iterable[String]) = names.flatMap(fs.get).fold(FsStats.Zero)(_ + _)
-    val commitFs = fsOf(Seq("model.commit"))
-    val serveFs = fsOf(serveSpans)
-    val storeBytes = etl.storeBytes.toDouble
+    val written = per(fsOf(Seq("model.commit")).bytesWritten)
     rep.layer("model.commit_s", mean("model.commit"), "s")
     rep.layer("model.expire_s", mean("model.expire"), "s")
-    rep.layer("model.files_written", per(etl.filesWritten), "count")
-    rep.layer("model.bytes_written", per(commitFs.bytesWritten), "B")
-    rep.layer("model.write_amp", per(commitFs.bytesWritten) / storeBytes, "ratio")
-    rep.layer("model.versions_live", etl.versionsLive, "count")
+    rep.layer("model.files_written", per(k.filesWritten), "count")
+    rep.layer("model.bytes_written", written, "B")
+    rep.layer("model.write_amp", rate(written, k.storeBytes), "ratio")
+    rep.layer("model.versions_live", k.versionsLive, "count")
     rep.layer("model.snapshot_open_ms", mean("model.snapshot_open", 1e3), "ms")
-    rep.layer("model.serve_bytes_read", per(serveFs.bytesRead), "B")
+    rep.layer("model.serve_bytes_read", per(fsOf(ServeSpans).bytesRead), "B")
     rep.layer("model.g1_point_ms", mean("model.g1_point", 1e3), "ms")
     rep.layer("model.g2_label_ms", mean("model.g2_label", 1e3), "ms")
     rep.layer("model.g3_degree_ms", mean("model.g3_degree", 1e3), "ms")
     rep.layer("model.g5_two_hop_ms", mean("model.g5_two_hop", 1e3), "ms")
     rep.layer("sources.scan_s", mean("sources.scan"), "s")
-    rep.layer("sources.bytes_read", per(fsOf(Seq("pipelines.flow_graph")).bytesRead), "B")
-    commonLayers(rep, Map.empty, Map.empty, overhead, gcPerCycle, jitPerCycle)
-    // self time per layer inside the cycle, and the share no layer holds
-    val self = tr.selfSeconds.filter { case (k, _) => !serveSpans(k) }
-    Seq("sources", "pipelines", "ops", "model", "ext").foreach { l =>
-      rep.layer(s"$l.self_s", per(self.collect {
-        case (k, v) if k.takeWhile(_ != '.') == l => v
-      }.sum), "s")
-    }
-    rep.layer("trace.unattributed_frac", self.getOrElse("etl.cycle", 0.0) / cycleWall, "ratio")
-  }
-
-  /** Metrics shared by both kinds of traced run. */
-  private def commonLayers(rep: Report, extS: Map[String, Double],
-      extJobs: Map[String, Double], overhead: Double, gcPerUnit: Double,
-      jitPerUnit: Double): Unit = {
+    rep.layer("sources.bytes_read", per(fsOf(Seq("sources.scan")).bytesRead), "B")
     MixQueries.foreach { q =>
-      rep.layer(s"ext.${q}_s", extS.getOrElse(q, 0.0), "s")
-      rep.layer(s"ext.$q.jobs", extJobs.getOrElse(q, 0.0), "count")
+      rep.layer(s"ext.${q}_s", mean(s"ext.$q"), "s")
+      rep.layer(s"ext.$q.jobs", rate(cnt.total(_ == s"ext.$q").jobs, tr.count(s"ext.$q")), "count")
     }
     rep.layer("jvm.gc_s", gcPerUnit, "s")
     rep.layer("jvm.jit_ms", jitPerUnit, "ms")
     rep.layer("trace.overhead_frac", overhead, "ratio")
+    // self time per layer inside the unit, and the share no layer holds
+    val self = tr.selfSeconds.filter { case (n, _) => !ServeSpans(n) }
+    def layerOf(n: String) = n.takeWhile(_ != '.')
+    Layers.foreach { l =>
+      rep.layer(s"$l.self_s", per(self.collect { case (n, v) if layerOf(n) == l => v }.sum), "s")
+    }
+    val attributed = self.collect { case (n, v) if Layers.contains(layerOf(n)) => v }.sum
+    rep.layer("trace.unattributed_frac", 1 - attributed / unitWall, "ratio")
   }
 
   /** Every query the mix can name; per-layer metrics exist for each. */
@@ -251,15 +266,15 @@ object Main {
     require(queries.toSet == MixQueries.toSet, "workloads.json mix differs from MixQueries")
     val dataDir = s"${a.benchDir}/${wl.get("data").asText()}"
     rep.note("data_seed", wl.get("data_seed").asText())
-    // set-up: open every table the mix reads and count its rows
     val tables = queries.flatMap(q => qnode.get(q).get("tables").elements().asScala.map(_.asText())).distinct
+    val mix = new Mix(spark, tr, dataDir, s"${a.work}/mix_out", queries)
+    val expected = mix.warmup() // also warms the JVM before the set-ups
+    // set-up: open every table the mix reads and count its rows
     val tableRows = timedSetups(rep) { _ =>
       tables.map(t => t -> spark.read.parquet(s"$dataDir/$t.parquet").count()).toMap
     }
     def rowsOf(q: String): Long = qnode.get(q).get("tables").elements().asScala
       .map(t => tableRows(t.asText())).sum
-    val mix = new Mix(spark, tr, dataDir, s"${a.work}/mix_out", queries)
-    val expected = mix.warmup()
 
     JvmStats.resetHeapPeak()
     val gc0 = JvmStats.gcMs(); val jit0 = JvmStats.jitMs()
@@ -308,55 +323,10 @@ object Main {
     rep.note("per_query_s", queries.map(q => s"${Report.str(q)}:${perQuery(q)}").mkString("{", ",", "}"))
 
     if (a.trace) {
-      val tracedRuns = done.filter(_._3).map(e => (e._1, e._2))
-      val untracedRuns = done.filterNot(_._3).map(e => (e._1, e._2))
-      val n = tracedRuns.size.toDouble
-      val all = tr.counters.total()
-      val traceS = tracedRuns.map(_._2).sum
-      val extS = tracedRuns.groupBy(_._1).map { case (q, rs) => q -> median(rs.map(_._2).toSeq) }
-      val extJobs = tr.counters.bySpan.collect { case (k, acc) if k.startsWith("ext.") =>
-        k.stripPrefix("ext.") -> acc.jobs.toDouble / tracedRuns.count(_._1 == k.stripPrefix("ext."))
-      }.toMap
-      val perPass = queries.size / n
-      rep.layer("spark.jobs", all.jobs * perPass, "count")
-      rep.layer("spark.stages", all.stages * perPass, "count")
-      rep.layer("spark.tasks", all.tasks * perPass, "count")
-      rep.layer("spark.idle_frac", 1 - all.taskMs / 1e3 / (traceS * a.cpus), "ratio")
-      rep.layer("spark.task_s", all.taskMs / 1e3 * perPass, "s")
-      rep.layer("spark.shuffle_write_mb", all.shuffleWrite / MiB * perPass, "MiB")
-      rep.layer("spark.shuffle_read_mb", all.shuffleRead / MiB * perPass, "MiB")
-      rep.layer("spark.spill_mb", all.spill / MiB * perPass, "MiB")
-      rep.layer("spark.gc_s", all.gcMs / 1e3 * perPass, "s")
-      rep.layer("spark.task_skew", tr.counters.taskSkew, "ratio")
-      EtlOnlyLayers.foreach { case (name, unit) => rep.layer(name, 0.0, unit) }
-      // each query's traced time against its untraced one
-      val untracedS = untracedRuns.groupBy(_._1).map { case (q, rs) => q -> median(rs.map(_._2).toSeq) }
-      val ratios = queries.filter(q => extS.contains(q) && untracedS.contains(q))
-        .map(q => extS(q) / untracedS(q))
-      commonLayers(rep, extS, extJobs, if (ratios.isEmpty) 0.0 else median(ratios) - 1,
+      val traced = done.filter(_._3)
+      layers(rep, tr, new EtlCounts, traced.size.toDouble / queries.size,
+        traced.map(_._2).sum, overheadFrac(done.toSeq),
         gcS * queries.size / execs.size, jitMs * queries.size / execs.size)
-      val extSelf = tr.selfSeconds.filter(_._1.startsWith("ext.")).values.sum
-      rep.layer("ext.self_s", extSelf * perPass, "s")
-      rep.layer("trace.unattributed_frac", 1 - extSelf / traceS, "ratio")
     }
   }
-
-  /** Per-layer metrics of the ETL workloads, zero on the mix. */
-  val EtlOnlyLayers: Seq[(String, String)] = Seq(
-    "pipelines.flow_graph_s" -> "s", "pipelines.flow_graph.rows_in" -> "count",
-    "pipelines.flow_graph.rows_out" -> "count", "pipelines.topology_s" -> "s",
-    "pipelines.topology.rows_in" -> "count", "pipelines.topology.rows_out" -> "count",
-    "pipelines.declared_deps_s" -> "s", "pipelines.declared_deps.rows_in" -> "count",
-    "pipelines.declared_deps.rows_out" -> "count", "ops.merge_edges_s" -> "s",
-    "ops.rollup_kept_ratio" -> "ratio", "ops.created" -> "count", "ops.matched" -> "count",
-    "ops.gc" -> "count", "ops.degraded" -> "count", "ops.refs_resolved_ratio" -> "ratio",
-    "model.commit_s" -> "s", "model.expire_s" -> "s", "model.files_written" -> "count",
-    "model.bytes_written" -> "B", "model.write_amp" -> "ratio",
-    "model.versions_live" -> "count",
-    "model.snapshot_open_ms" -> "ms", "model.serve_bytes_read" -> "B",
-    "model.g1_point_ms" -> "ms", "model.g2_label_ms" -> "ms",
-    "model.g3_degree_ms" -> "ms", "model.g5_two_hop_ms" -> "ms",
-    "sources.scan_s" -> "s", "sources.bytes_read" -> "B",
-    "sources.self_s" -> "s", "pipelines.self_s" -> "s", "ops.self_s" -> "s",
-    "model.self_s" -> "s")
 }

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.DataFrame
 
 /** One timed span: a layer call, nested under `parent` (-1 at top). */
 final case class Span(id: Int, name: String, startNs: Long, endNs: Long,
@@ -127,10 +128,11 @@ object JvmStats {
 }
 
 /** Span recorder. When off, `span` only runs the body: no timing, no
-  * local property, no record. When on, each span sets the
-  * `perfbench.span` local property so the listener attributes the jobs it
-  * starts, and records its filesystem-counter delta. Spans stay in memory
-  * and are written once at exit. */
+  * local property, no record, and `barrier` returns its frame unchanged.
+  * When on, each span sets the `perfbench.span` local property so the
+  * listener attributes the jobs it starts, and records its
+  * filesystem-counter delta. Spans stay in memory and are written once at
+  * exit. */
 final class Tracer(sc: SparkContext, val counters: SparkCounters) {
   var on = false
   var cycle = 0
@@ -162,6 +164,11 @@ final class Tracer(sc: SparkContext, val counters: SparkCounters) {
     }
   }
   private val childFs = mutable.Map.empty[Int, FsStats.Snap]
+
+  /** Traced runs only: materialize `df` here, so the enclosing span holds
+    * the jobs that compute it. Untraced runs keep the plain, lazy
+    * composition; the barriers' cost shows in `trace.overhead_frac`. */
+  def barrier(df: DataFrame): DataFrame = if (on) df.localCheckpoint() else df
 
   /** Self seconds per span name: own duration minus direct children's. */
   def selfSeconds: Map[String, Double] = {

@@ -20,11 +20,11 @@ object SelfTest {
 
   /** A few services and rows: every cycle kind shows up within six cycles. */
   val Tiny: EtlParams = EtlParams(services = 8, unresolvedSrcShare = 0.1,
-    zipfS = 0.8, hotShare = 0.2, rowsPerMinute = 40, lookbackMin = 6,
+    zipfS = 0.8, rowsPerMinute = 40, lookbackMin = 6,
     stepMin = 5, lateShare = 0.2, errShare = 0.1, resources = 60,
     churnShare = 0.1, alarmShare = 0.05, topologyEvery = 3, stacks = 3,
     deployEvery = 2, stackResources = 5, nestDepth = 2,
-    danglingRefShare = 0.3, keepLast = 2, startEdges = 6, warmupCycles = 0)
+    danglingRefShare = 0.3, keepLast = 2, warmupCycles = 0)
 
   def main(args: Array[String]): Unit = {
     val root = args(0)
@@ -33,7 +33,7 @@ object SelfTest {
     test("generator is deterministic per seed") {
       val a = new Gen(7, Tiny); val b = new Gen(7, Tiny)
       (0 to 6).foreach(c => check(a.input(c) == b.input(c), s"cycle $c differs"))
-      check(a.history == b.history && a.startEdges == b.startEdges, "set-up inputs differ")
+      check(a.history == b.history, "set-up inputs differ")
     }
 
     test("generator differs across seeds") {
