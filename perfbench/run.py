@@ -47,7 +47,15 @@ JDK_OPENS = [
 def java(classes: Path, main: str, args: list, work: Path, heap: str = "3g") -> list:
     opens = [a for p in JDK_OPENS for a in ("--add-opens", f"java.base/{p}=ALL-UNNAMED")]
     cp = f"{classes}:{build.spark_jars()}/*"
-    return ["java", *opens, f"-Xmx{heap}", "-Xss4m", "-XX:+UseG1GC", "-XX:-UsePerfData",
+    # A fixed heap and capped GC threads: heap resizing and GC worker
+    # threads racing the task threads for cores move run times. Compile
+    # thresholds at a tenth of the default: with the defaults the C2 JIT
+    # was still speeding ETL cycles up by a third after 100 s, so a run's
+    # median hung on how many cycles fit; at a tenth the cycles reach the
+    # same steady time within a few rounds.
+    return ["java", *opens, f"-Xms{heap}", f"-Xmx{heap}", "-Xss4m", "-XX:+UseG1GC",
+            "-XX:ParallelGCThreads=2", "-XX:ConcGCThreads=1",
+            "-XX:CompileThresholdScaling=0.1", "-XX:-UsePerfData",
             f"-Djava.io.tmpdir={work / 'tmp'}", "-cp", cp, main, *args]
 
 

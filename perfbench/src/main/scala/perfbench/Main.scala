@@ -27,8 +27,12 @@ object Main {
       need("trace") == "1", need("bench-dir"), need("work"), need("out"))
   }
 
-  /** Cores of the `local[n]` master: every core of the host. */
-  val Cores: Int = Runtime.getRuntime.availableProcessors()
+  /** Task slots of the `local[n]` master: two, or one on a one-core host.
+    * The other cores stay free for the driver thread, the GC and the JIT
+    * compiler, so a stage does not wait on a task whose core the host lent
+    * elsewhere; on 4 cores the mix ran as fast with two slots as with
+    * four, and the ETL cycles are bound by the driver thread. */
+  val Cores: Int = math.min(2, Runtime.getRuntime.availableProcessors())
   /** Set-ups per run; each workload warms the JVM before them. */
   val SetupRepeats = 7
   val MiB = 1048576.0
